@@ -355,7 +355,7 @@ object ChunkStore {
       .withColumn("cb", cb(col("chunk_hash"), nBuckets))
       .persist()
     val touched = newChunks.select("cb").distinct()
-      .collect().map(_.getLong(0)) // bounded: <= nBuckets values
+      .collect().map(_.getLong(0)).sorted // bounded: <= nBuckets values
     // a store seeded from an empty corpus has no cb= dirs yet (parquet
     // cannot persist a zero-file schema) — treat it as zero known hashes
     val (chFs, chRoot) = fsOf(spark, s"$path/chunks")

@@ -429,7 +429,7 @@ object LabelStore {
       survivors
         .unionByName(newLabels)
         .withColumn(partCol, bucketOf)
-        .filter(col(partCol).isin(dirty.toSeq: _*)) // all rows qualify; keeps the plan honest
+        .filter(col(partCol).isin(dirty.toSeq.sorted: _*)) // all rows qualify; keeps the plan honest
         .repartition(col(partCol))
         .write.partitionBy(partCol).parquet(tmp.toString)
       // dirty buckets that end up EMPTY need explicit deletion at

@@ -141,9 +141,11 @@ final class Warehouse(val root: String, spark: SparkSession) {
   /** Read ONLY the given day-partitions of a partitioned table. The filter
     * is on the partition column, so Catalyst resolves it at planning time
     * (PartitionFilters) — only the matching directories are listed/scanned,
-    * which is what makes a 100 TB target table cheap to merge into. */
+    * which is what makes a 100 TB target table cheap to merge into.
+    * The IN-list is sorted so that one set of dates always gives the same
+    * plan, and the same generated code wherever the filter is compiled. */
   def readPartitions(id: TableId, dates: Seq[java.sql.Date]): DataFrame =
-    read(id).filter(col(PartCol).isin(dates.map(_.toString): _*))
+    read(id).filter(col(PartCol).isin(dates.map(_.toString).sorted: _*))
 
   /** CTAS analog (bq_create_table_as — incremental_log.sql:97-103). */
   def overwrite(id: TableId, df: DataFrame): Unit = {
@@ -267,7 +269,7 @@ final class Warehouse(val root: String, spark: SparkSession) {
     // precise file-count control.
     val (single, multi) = needy.partition(_._2 == 1)
     if (single.nonEmpty) {
-      val pvs = single.map(_._1)
+      val pvs = single.map(_._1).sorted // listing order is unspecified
       val df = read(id).filter(col(PartCol).isin(pvs: _*))
         .repartition(pvs.size, col(PartCol))
       overwriteTouchedPartitions(id, df)
@@ -862,7 +864,7 @@ final class Warehouse(val root: String, spark: SparkSession) {
             val remaining = touched.filter(surviving.contains)
             if (remaining.nonEmpty)
               overwriteTouchedPartitions(id,
-                survivors.filter(col(PartCol).isin(remaining.map(_.toString): _*)))
+                survivors.filter(col(PartCol).isin(remaining.map(_.toString).sorted: _*)))
             hits.map(_._2).sum
           }
         }

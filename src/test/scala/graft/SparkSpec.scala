@@ -42,6 +42,11 @@ object SparkSpec {
       // expensive generator children into interpreted Filters)
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      // mirror GraftSession: codegen classes reusable across ops. The
+      // cache is JVM-wide and sized by the first session to run codegen,
+      // which in the forked test JVM is usually this one.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
